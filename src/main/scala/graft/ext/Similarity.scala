@@ -93,9 +93,10 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
 
   /** Exact brute-force cosine top-k against the query row. The cosine is the
-    * native codegen'd [[graft.functions.CosFExpr]] (same sequential fold as
-    * the SQL form, one compiled call per row); broadcast query row +
-    * `TakeOrderedAndProject` means no shuffle of the fact side.
+    * native codegen'd `graft_cos` kernel ([[graft.functions.VecOps.cosF]];
+    * same sequential fold as the SQL form, one compiled call per row);
+    * broadcast query row + `TakeOrderedAndProject` means no shuffle of the
+    * fact side.
     */
   def knnBrute(emb: DataFrame, kTop: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
@@ -2353,40 +2354,6 @@ object Similarity {
       .join(broadcast(fexact), col("vec_id") === col("evid"), "left_outer")
       .select(col("vec_id"), col("label"), col("c1"), col("d2"),
         col("evid").isNotNull.as("in_filtered_exact_topk"))
-
-  /** The x28 inline-filtered serving arm under an ARBITRARY predicate —
-    * the FilteredSweep tool's entry for the selectivity crossover
-    * measurement (BASELINE.md records the curve; the declared x28 keeps
-    * the fixed label contract so its oracle stays expressible).
-    */
-  private[graft] def ivfPqFilteredRerankPred(emb: DataFrame,
-      pred: org.apache.spark.sql.Column, nprobe: Int = 2,
-      shortK: Int = Serve.ShortK, kTop: Int = 10): DataFrame = {
-    val (scored, q, fexact) = ivfPqFilteredCore(emb, Serve.K1Default,
-      Serve.M, Serve.SubDim, Serve.Kcode, Serve.Iters, nprobe, pred,
-      kTop, Serve.Pp)
-    filteredRerankTail(scored, q, fexact, shortK, kTop)
-  }
-
-  /** The x27 pre-filter-exact arm under an arbitrary predicate (always
-    * correct; the sweep's other endpoint): pushed-down scan + one compiled
-    * L2 per survivor + TakeOrdered.
-    */
-  private[graft] def filteredExactPred(emb: DataFrame,
-      pred: org.apache.spark.sql.Column, kTop: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    val q = emb.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("qe"))
-    emb.filter(pred)
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, ex -> CAST(ex AS DOUBLE))").as("e"))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2", expr("graft_l2(e, qe)"))
-      .select("vec_id", "label", "d2")
-      .orderBy(col("d2"), col("vec_id")).limit(kTop)
-  }
 
   def ivfPqFilteredRerank(emb: DataFrame, k1Default: Int = Serve.K1Default,
       m: Int = Serve.M, subDim: Int = Serve.SubDim,

@@ -63,6 +63,13 @@ final class KmvBuffer(val k: Int) {
 object KmvBuffer {
   private val HEX = "0123456789abcdef".toCharArray
 
+  /** The sketch size `graft_kmv` keeps and `graft_kmv_union_est` assumes. */
+  val DefaultK = 64
+
+  /** [[unionEstimate]] at [[DefaultK]]: the `graft_kmv_union_est` kernel. */
+  def unionEstimate(a: Array[Byte], b: Array[Byte]): Double =
+    unionEstimate(a, b, DefaultK)
+
   /** KMV set-union estimate from two SERIALIZED sketches (the 8-byte
     * big-endian ascending layout of [[KmvBuffer.sketchBytes]]): merge the
     * kept sets, keep the k smallest, apply the standard estimator. This is

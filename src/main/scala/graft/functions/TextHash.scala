@@ -116,6 +116,65 @@ object TextHash {
     */
   val edgeMax = 5
 
+  /** Open-addressed set of byte slices of one row's UTF-8 bytes — the
+    * distinct-token/gram/passage table of edgeNgramStats, bpeishStats,
+    * tokDf, distinctTokens and passagesDistinct. A slice is an (offset,
+    * length) pair of `bytes`: 64-bit byte hash, true byte-compare on a hash
+    * hit, so membership is exact and no slice allocates. Used slots are
+    * marked explicitly, so an empty slice is an ordinary member. Sized for
+    * `expected` members at load <= 0.5, doubling past that.
+    */
+  private final class SliceSet(bytes: Array[Byte], expected: Int) {
+    private var cap = { var c = 8; while (c < expected * 2) c <<= 1; c }
+    private var hs = new Array[Long](cap)
+    private var offs = new Array[Int](cap)
+    private var lns = new Array[Int](cap)
+    private var used = new Array[Boolean](cap)
+    private var n = 0
+
+    def size: Int = n
+
+    /** Adds `bytes[off, off + len)`; true when it was not yet a member. */
+    def add(off: Int, len: Int): Boolean = {
+      if ((n + 1) * 2 > cap) grow()
+      var h = 1125899906842597L
+      var k = off
+      while (k < off + len) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
+      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
+      while (used(slot)) {
+        if (hs(slot) == h && lns(slot) == len && sameBytes(offs(slot), off, len))
+          return false
+        slot = (slot + 1) & (cap - 1)
+      }
+      used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = len
+      n += 1
+      true
+    }
+
+    private def sameBytes(a: Int, b: Int, len: Int): Boolean = {
+      var m = 0
+      while (m < len && bytes(a + m) == bytes(b + m)) m += 1
+      m == len
+    }
+
+    private def grow(): Unit = {
+      val (oldHs, oldOffs, oldLns, oldUsed) = (hs, offs, lns, used)
+      cap <<= 1
+      hs = new Array[Long](cap); offs = new Array[Int](cap)
+      lns = new Array[Int](cap); used = new Array[Boolean](cap)
+      var j = 0
+      while (j < oldUsed.length) {
+        if (oldUsed(j)) {
+          var slot = ((oldHs(j) ^ (oldHs(j) >>> 32)) & (cap - 1)).toInt
+          while (used(slot)) slot = (slot + 1) & (cap - 1)
+          used(slot) = true; hs(slot) = oldHs(j)
+          offs(slot) = oldOffs(j); lns(slot) = oldLns(j)
+        }
+        j += 1
+      }
+    }
+  }
+
   /** Edge-ngram stats in ONE pass: token prefixes of length 1..edgeMax
     * (split on single spaces, empty tokens skipped, prefixes by codepoint),
     * returning (total grams, distinct grams, first 5 distinct grams in
@@ -133,8 +192,8 @@ object TextHash {
     * the same unsigned-byte-then-length comparison as UTF8String.compareTo
     * — byte-wise order, identical to the TreeSet form, Spark `array_sort`
     * and DuckDB's default binary collation (t05 oracle hash unchanged).
-    * Zero allocation per gram; the only per-row allocations are the three
-    * table arrays and the output string.
+    * Zero allocation per gram; the only per-row allocations are the
+    * [[SliceSet]] and the output string.
     */
   def edgeNgramStats(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
@@ -156,14 +215,7 @@ object TextHash {
         i = j
       }
     }
-    // open-addressed slice table (pow2, load <= 0.5; lens==0 marks empty —
-    // grams are never empty)
-    var cap = 8
-    while (cap < total * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    var nDistinct = 0
+    val seen = new SliceSet(bytes, total)
     // bounded first-5 sample of the distinct grams, byte-ascending
     val f5o = new Array[Int](5)
     val f5l = new Array[Int](5)
@@ -180,24 +232,7 @@ object TextHash {
       l1 - l2
     }
     def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var isNew = false
-      var done = false
-      while (!done) {
-        if (lns(slot) == 0) {
-          hs(slot) = h; offs(slot) = off; lns(slot) = l
-          isNew = true; done = true
-        } else if (hs(slot) == h && lns(slot) == l &&
-            cmpSlice(offs(slot), l, off, l) == 0) {
-          done = true
-        } else slot = (slot + 1) & (cap - 1)
-      }
-      if (isNew) {
-        nDistinct += 1
+      if (seen.add(off, l)) {
         if (f5n < 5 || cmpSlice(off, l, f5o(f5n - 1), f5l(f5n - 1)) < 0) {
           var p = if (f5n < 5) f5n else 4
           while (p > 0 && cmpSlice(off, l, f5o(p - 1), f5l(p - 1)) < 0) {
@@ -238,7 +273,7 @@ object TextHash {
       q += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](total, nDistinct, UTF8String.fromBytes(out)))
+      Array[Any](total, seen.size, UTF8String.fromBytes(out)))
   }
 
   /** DISTINCT word-5-gram poly-chain hashes in one pass (d08 hot path):
@@ -697,7 +732,7 @@ object TextHash {
     * the token array or re-evaluating the lambda body per element.
     */
   def passages(s: UTF8String, w: Int): ArrayData = {
-    // PassagesExpr rejects foldable w < 1 at analysis time; this guards the
+    // graft_passages rejects a foldable w < 1 at analysis time; this guards the
     // direct-call and non-foldable paths the analyzer can't see.
     require(w >= 1, s"passage width must be >= 1, got $w")
     val bytes = s.getBytes
@@ -768,7 +803,7 @@ object TextHash {
     * space, at which the scan just advances) plus
     * `size(split(text, ' +'))` (space-run count + 1 — Java split keeps
     * leading/trailing empties at limit -1). Distinct matches are counted
-    * with the edgeNgramStats slice table (zero allocation per token);
+    * with the [[SliceSet]] (zero allocation per token);
     * n_uniq is exact (byte-compare on hash hit). The regex form converted
     * the row to a Java String and allocated every match into an array,
     * then array_distinct rebuilt a hash set of UTF8Strings per row —
@@ -798,34 +833,7 @@ object TextHash {
         total += 1
       }
     }
-    // open-addressed slice table (edgeNgramStats' discipline): 64-bit byte
-    // hash, true byte-compare on hit — exact distinct count
-    var cap = 8
-    while (cap < total * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    var nDistinct = 0
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (lns(slot) == 0) {
-          hs(slot) = h; offs(slot) = off; lns(slot) = l
-          nDistinct += 1; done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
+    val seen = new SliceSet(bytes, total)
     i = 0
     while (i < n) {
       val b = bytes(i)
@@ -835,11 +843,11 @@ object TextHash {
         if (isLetter(b)) { while (i < n && isLetter(bytes(i))) i += 1 }
         else if (isDigit(b)) { while (i < n && isDigit(bytes(i))) i += 1 }
         else i += UTF8String.numBytesForFirstByte(b)
-        offer(start, i - start)
+        seen.add(start, i - start)
       }
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](total, nDistinct, wsRuns + 1))
+      Array[Any](total, seen.size, wsRuns + 1))
   }
 
   /** t14's scrub against a broadcast boilerplate lexicon in ONE pass:
@@ -901,39 +909,15 @@ object TextHash {
       org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
-    // distinct token slices via the open-addressed table
     var nTok = 1
     var i = 0
     while (i < n) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    var cap = 8
-    while (cap < nTok * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    val used = new Array[Boolean](cap)
+    val seen = new SliceSet(bytes, nTok)
     var nToks = 0L
     var sumDf = 0L
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          done = true
-          val idx = searchSorted(ts, bytes, off, l)
-          if (idx >= 0) { nToks += 1L; sumDf += ds.getLong(idx) }
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
+    def offer(off: Int, l: Int): Unit = if (seen.add(off, l)) {
+      val idx = searchSorted(ts, bytes, off, l)
+      if (idx >= 0) { nToks += 1L; sumDf += ds.getLong(idx) }
     }
     var tokStart = 0
     i = 0
@@ -988,35 +972,10 @@ object TextHash {
     var nTok = 1
     var i = 0
     while (i < n) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    var cap = 8
-    while (cap < nTok * 2) cap <<= 1
-    val hs = new Array[Long](cap)
-    val offs = new Array[Int](cap)
-    val lns = new Array[Int](cap)
-    val used = new Array[Boolean](cap)
+    val seen = new SliceSet(bytes, nTok)
     val out = new java.util.ArrayList[AnyRef](nTok)
-    def offer(off: Int, l: Int): Unit = {
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          out.add(UTF8String.fromBytes(
-            java.util.Arrays.copyOfRange(bytes, off, off + l)))
-          done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
+    def offer(off: Int, l: Int): Unit = if (seen.add(off, l))
+      out.add(UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, off, off + l)))
     var tokStart = 0
     i = 0
     while (i < n) {
@@ -1038,57 +997,10 @@ object TextHash {
     val bytes = s.getBytes
     val nb = bytes.length
     val approx = nb / (4 * math.max(w, 1)) + 2
-    var cap = 8
-    while (cap < approx * 2) cap <<= 1
-    var hs = new Array[Long](cap)
-    var offs = new Array[Int](cap)
-    var lns = new Array[Int](cap)
-    var used = new Array[Boolean](cap)
-    var nSeen = 0
+    val seen = new SliceSet(bytes, approx)
     val out = new java.util.ArrayList[AnyRef](approx)
-    def grow(): Unit = {
-      val oldCap = cap
-      cap <<= 1
-      val nhs = new Array[Long](cap)
-      val noffs = new Array[Int](cap)
-      val nlns = new Array[Int](cap)
-      val nused = new Array[Boolean](cap)
-      var j = 0
-      while (j < oldCap) {
-        if (used(j)) {
-          var slot = ((hs(j) ^ (hs(j) >>> 32)) & (cap - 1)).toInt
-          while (nused(slot)) slot = (slot + 1) & (cap - 1)
-          nused(slot) = true; nhs(slot) = hs(j)
-          noffs(slot) = offs(j); nlns(slot) = lns(j)
-        }
-        j += 1
-      }
-      hs = nhs; offs = noffs; lns = nlns; used = nused
-    }
-    def offer(off: Int, l: Int): Unit = {
-      if ((nSeen + 1) * 2 > cap) grow()
-      var h = 1125899906842597L
-      var k = off
-      val end = off + l
-      while (k < end) { h = h * 31 + (bytes(k) & 0xff); k += 1 }
-      var slot = ((h ^ (h >>> 32)) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        if (!used(slot)) {
-          used(slot) = true; hs(slot) = h; offs(slot) = off; lns(slot) = l
-          nSeen += 1
-          out.add(UTF8String.fromBytes(
-            java.util.Arrays.copyOfRange(bytes, off, off + l)))
-          done = true
-        } else if (hs(slot) == h && lns(slot) == l && {
-            var m = 0
-            val o2 = offs(slot)
-            while (m < l && bytes(o2 + m) == bytes(off + m)) m += 1
-            m == l
-          }) done = true
-        else slot = (slot + 1) & (cap - 1)
-      }
-    }
+    def offer(off: Int, l: Int): Unit = if (seen.add(off, l))
+      out.add(UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, off, off + l)))
     var start = 0
     var spaces = 0
     var i = 0
